@@ -486,7 +486,48 @@ object Microbench {
     docs.unpersist()
   }
 
+  /** Batch scoring kernel, single thread, no Spark: the scalar per-pair
+    * loop against the query-per-lane [[graft.expr.QueryLanes]] over the
+    * same rows, checking every value bit for bit:
+    * `runMain graft.Microbench distmulti [rows] [nq] [dims]`. */
+  def profileDistMulti(args: Array[String]): Unit = {
+    val rows = args.lift(1).map(_.toInt).getOrElse(20000)
+    val nq = args.lift(2).map(_.toInt).getOrElse(64)
+    val dims = args.lift(3).map(_.toInt).getOrElse(384)
+    val rnd = new scala.util.Random(11)
+    val corpus = Array.fill(rows, dims)(rnd.nextFloat() - 0.5f)
+    val qs = Array.fill(nq, dims)(rnd.nextFloat() - 0.5f)
+    println(s"simd lanes probe passed: ${graft.expr.VectorKernels.simdLanes}" +
+      s" (${graft.simd.SimdLanes.laneCount()} f64 lanes)")
+    for ((code, name) <- Seq(2 -> "cosine(dot)", 1 -> "l2sq")) {
+      val lanes = new graft.expr.QueryLanes(code, qs)
+      var sink = 0.0
+      time(s"scalar $name $rows x $nq x $dims", 5) {
+        var r = 0
+        while (r < rows) {
+          var i = 0
+          while (i < nq) {
+            sink += graft.expr.VectorKernels.distance(code, corpus(r), qs(i)); i += 1
+          }
+          r += 1
+        }
+      }
+      time(s"lanes  $name $rows x $nq x $dims", 5) {
+        var r = 0
+        while (r < rows) { sink += lanes.distances(corpus(r), 0)(0); r += 1 }
+      }
+      val mismatches = corpus.iterator.map { row =>
+        val got = lanes.distances(row, 0)
+        (0 until nq).count(i => java.lang.Double.doubleToRawLongBits(got(i)) !=
+          java.lang.Double.doubleToRawLongBits(
+            graft.expr.VectorKernels.distance(code, row, qs(i))))
+      }.sum
+      println(s"$name bit mismatches: $mismatches of ${rows.toLong * nq} (sink=$sink)")
+    }
+  }
+
   def main(args: Array[String]): Unit = {
+    if (args.headOption.contains("distmulti")) { profileDistMulti(args); return }
     val spark = SparkSession.builder()
       .master(sys.env.getOrElse("GRAFT_MB_MASTER", "local[8]"))
       .config("spark.sql.shuffle.partitions",

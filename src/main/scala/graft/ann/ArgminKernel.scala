@@ -24,7 +24,8 @@ import graft.expr.VectorKernels
   * instance repeats every row, so the transpose runs once per task (a
   * few hundred KB at most) and the per-row cost is one reference
   * compare. A thread-local memo needs no synchronization on the hot
-  * path.
+  * path; it holds its entry through a SoftReference, so a retired model
+  * never outlives memory pressure.
   */
 private[graft] object ArgminKernel {
 
@@ -138,18 +139,23 @@ private[graft] object ArgminKernel {
   // Per-thread last-model memo: one entry of each kind per thread (a
   // task's projection reuses one model object for every row; a prepared
   // entry also owns its scratch buffer, so no cross-thread sharing).
-  private val centsMemo = new ThreadLocal[Cents]
-  private val booksMemo = new ThreadLocal[Books]
+  // Held softly: a pooled executor thread outlives its jobs, and a
+  // retired model's transpose (up to ~1 MB for k=256, m=32 PQ) must stay
+  // collectable rather than pinned for the JVM's lifetime.
+  private val centsMemo = new ThreadLocal[java.lang.ref.SoftReference[Cents]]
+  private val booksMemo = new ThreadLocal[java.lang.ref.SoftReference[Books]]
 
   def cents(c: Array[Array[Float]]): Cents = {
-    val e = centsMemo.get()
+    val r = centsMemo.get()
+    val e = if (r == null) null else r.get()
     if (e != null && (e.cents eq c)) e
-    else { val p = new Cents(c); centsMemo.set(p); p }
+    else { val p = new Cents(c); centsMemo.set(new java.lang.ref.SoftReference(p)); p }
   }
 
   def books(b: Array[Array[Array[Float]]]): Books = {
-    val e = booksMemo.get()
+    val r = booksMemo.get()
+    val e = if (r == null) null else r.get()
     if (e != null && (e.codebooks eq b)) e
-    else { val p = new Books(b); booksMemo.set(p); p }
+    else { val p = new Books(b); booksMemo.set(new java.lang.ref.SoftReference(p)); p }
   }
 }

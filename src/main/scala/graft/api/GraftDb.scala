@@ -67,7 +67,13 @@ final class GraftDb(val spark: SparkSession) {
     * db.close("articles")   // frees caches; safe to call twice
     * }}} */
   def close(name: String): Unit = {
-    registry.remove(name).foreach(_._1.unpersist())
+    registry.remove(name).foreach { case (df, _) =>
+      // Spark uncaches EVERY cached plan with the same result: another
+      // open collection over the same files keeps its cached blocks
+      val plan = df.queryExecution.analyzed
+      if (!registry.values.exists(_._1.queryExecution.analyzed.sameResult(plan)))
+        df.unpersist()
+    }
     invalidateIndexCaches(name)
   }
 
@@ -580,7 +586,7 @@ final class GraftDb(val spark: SparkSession) {
 
   private def invalidateIndexCaches(name: String): Unit = {
     hnswCache.remove(name); ivfCache.remove(name)
-    codedFrameCache.remove(name); openPaths.remove(name)
+    codedFrameCache.remove(name); openPaths.remove(name).foreach(releaseLayoutState)
     hnswRowCount.remove(name)
     hnswGen.put(name, hnswGen.getOrElse(name, 0L) + 1L)
     graft.index.ShardedHnsw.clearCache(s"$name@$dbToken#")
@@ -602,6 +608,12 @@ final class GraftDb(val spark: SparkSession) {
     lastFilterRoute.remove(name)
     GraftIndexRegistry.notifyMutation(name)
   }
+
+  /** Drop a graph layout's persisted serving state
+    * ([[graft.index.LayoutState]]) unless another open collection
+    * still serves from the same path. */
+  private def releaseLayoutState(path: String): Unit =
+    if (!openPaths.values.exists(_ == path)) graft.index.LayoutState.release(path)
 
   /** Largest m <= 8 dividing the dimension (PQ needs m | dims). */
   private def pqConfigFor(config: CollectionConfig): graft.ann.Pq.PqConfig =
@@ -1524,10 +1536,14 @@ final class GraftDb(val spark: SparkSession) {
       case "hnsw" =>
         // validate the sidecar now (a failed open must not bind the
         // path); shard graphs themselves reconstruct lazily on first
-        // search, into the executor cache keyed by the layout path
+        // search, into the executor cache keyed by the layout path. A
+        // re-capture follows a rewrite of the files (append, compact):
+        // the persisted serving state lists the old ones
         graft.ann.ModelStore.loadHnsw(spark, idxSidecar(path))
+        graft.index.LayoutState.release(path)
       case "vamana" =>
         graft.ann.ModelStore.loadVamana(spark, idxSidecar(path))
+        graft.index.LayoutState.release(path)
       case "flat" => ()
       case other => throw new IllegalArgumentException(
         s"index $other has no persistable layout")

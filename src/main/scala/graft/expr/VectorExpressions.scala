@@ -62,15 +62,33 @@ case class VectorDistance(left: Expression, right: Expression, metricCode: Int)
     copy(left = l, right = r)
 }
 
+/** Generated-class state for a broadcast query block: the task
+  * prepares its [[QueryLanes]] on the first row and reuses it for the
+  * rest. Returns the state field and its lazy-init statement. */
+private[expr] object QueryLanesCodegen {
+  def state(ctx: CodegenContext,
+      queries: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
+      metricCode: Int): (String, String) = {
+    val bcRef = ctx.addReferenceObj("queryBatch", queries,
+      "org.apache.spark.broadcast.Broadcast")
+    val lanes = ctx.addMutableState("graft.expr.QueryLanes", "qlanes")
+    (lanes, s"""if ($lanes == null) {
+        $lanes = new graft.expr.QueryLanes($metricCode, (float[][]) $bcRef.value());
+      }""")
+  }
+}
+
 /** Distances of ONE stored f32 vector against a WHOLE query batch —
   * the batch brute-force scan shape: the row decodes once, every query
   * reuses it, and the output is a primitive double array that a
   * `posexplode` turns into slim (row, query-index, raw) triples. The
   * batch rides an ordinary `SparkContext.broadcast` handle (fetched
-  * once per executor, cached in generated-class state), NOT a plan
-  * literal or a closure capture — a 100k-query block would otherwise be
-  * re-deserialized per task inside the task binary. Per-(row, query)
-  * values equal [[VectorDistance]] bit for bit. */
+  * once per executor), NOT a plan literal or a closure capture — a
+  * 100k-query block would otherwise be re-deserialized per task inside
+  * the task binary. Each task prepares the block's [[QueryLanes]]
+  * table once, in generated-class state, and scores rows one query per
+  * SIMD lane. Per-(row, query) values equal [[VectorDistance]] bit for
+  * bit. */
 case class VectorDistanceMulti(child: Expression,
     queries: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
     metricCode: Int, prefix: Int = 0) extends UnaryExpression {
@@ -78,20 +96,16 @@ case class VectorDistanceMulti(child: Expression,
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "vector_distance_multi"
 
-  @transient private lazy val qs: Array[Array[Float]] = queries.value
+  @transient private lazy val lanes = new QueryLanes(metricCode, queries.value)
 
   override protected def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      VectorKernels.distanceMultiPrefix(metricCode, v.asInstanceOf[ArrayData], qs, prefix))
+    lanes.distancesData(v.asInstanceOf[ArrayData], prefix)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("queryBatch", queries,
-      "org.apache.spark.broadcast.Broadcast")
-    val mat = ctx.addMutableState("float[][]", "qmat")
+    val (st, init) = QueryLanesCodegen.state(ctx, queries, metricCode)
     nullSafeCodeGen(ctx, ev, v => s"""
-      if ($mat == null) { $mat = (float[][]) $bcRef.value(); }
-      ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        graft.expr.VectorKernels.distanceMultiPrefix($metricCode, $v, $mat, $prefix));""")
+      $init
+      ${ev.value} = $st.distancesData($v, $prefix);""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): VectorDistanceMulti =
@@ -113,7 +127,7 @@ case class PackedDotMulti(child: Expression,
   @transient private lazy val qs: Array[Array[Float]] = queries.value
 
   override protected def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    UnsafeArrayData.fromPrimitiveArray(
       VectorKernels.packedAsymmetricDotMulti(v.asInstanceOf[ArrayData], qs, negate))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -122,8 +136,9 @@ case class PackedDotMulti(child: Expression,
     val mat = ctx.addMutableState("float[][]", "qmat")
     nullSafeCodeGen(ctx, ev, v => s"""
       if ($mat == null) { $mat = (float[][]) $bcRef.value(); }
-      ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        graft.expr.VectorKernels.packedAsymmetricDotMulti($v, $mat, $negate));""")
+      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(
+          graft.expr.VectorKernels.packedAsymmetricDotMulti($v, $mat, $negate));""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): PackedDotMulti =
@@ -142,7 +157,7 @@ case class PackedHammingMulti(child: Expression,
   @transient private lazy val qs: Array[Array[Long]] = queryBits.value
 
   override protected def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    UnsafeArrayData.fromPrimitiveArray(
       VectorKernels.packedHammingMulti(v.asInstanceOf[ArrayData], qs, dims))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -151,8 +166,9 @@ case class PackedHammingMulti(child: Expression,
     val mat = ctx.addMutableState("long[][]", "qbits")
     nullSafeCodeGen(ctx, ev, v => s"""
       if ($mat == null) { $mat = (long[][]) $bcRef.value(); }
-      ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        graft.expr.VectorKernels.packedHammingMulti($v, $mat, $dims));""")
+      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(
+          graft.expr.VectorKernels.packedHammingMulti($v, $mat, $dims));""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): PackedHammingMulti =
@@ -160,8 +176,8 @@ case class PackedHammingMulti(child: Expression,
 }
 
 /** bf16 twin of [[VectorDistanceMulti]]: one 2 B/dim unpack per row,
-  * then the float kernel per query ([[VectorKernels.distanceBf16Multi]]
-  * — bit-equal to [[Bf16VectorDistance]] per pair). */
+  * then the task's [[QueryLanes]] against every query — bit-equal to
+  * [[Bf16VectorDistance]] per pair. */
 case class Bf16VectorDistanceMulti(child: Expression,
     queries: org.apache.spark.broadcast.Broadcast[Array[Array[Float]]],
     metricCode: Int) extends UnaryExpression {
@@ -169,20 +185,16 @@ case class Bf16VectorDistanceMulti(child: Expression,
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "bf16_vector_distance_multi"
 
-  @transient private lazy val qs: Array[Array[Float]] = queries.value
+  @transient private lazy val lanes = new QueryLanes(metricCode, queries.value)
 
   override protected def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      VectorKernels.distanceBf16Multi(metricCode, v.asInstanceOf[Array[Byte]], qs))
+    lanes.distancesBf16Data(v.asInstanceOf[Array[Byte]])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bcRef = ctx.addReferenceObj("queryBatch", queries,
-      "org.apache.spark.broadcast.Broadcast")
-    val mat = ctx.addMutableState("float[][]", "qmat")
+    val (st, init) = QueryLanesCodegen.state(ctx, queries, metricCode)
     nullSafeCodeGen(ctx, ev, v => s"""
-      if ($mat == null) { $mat = (float[][]) $bcRef.value(); }
-      ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        graft.expr.VectorKernels.distanceBf16Multi($metricCode, $v, $mat));""")
+      $init
+      ${ev.value} = $st.distancesBf16Data($v);""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Bf16VectorDistanceMulti =
@@ -532,7 +544,7 @@ case class MaxSimMulti(child: Expression,
   @transient private lazy val qs: Array[Array[Array[Float]]] = queries.value
 
   override protected def nullSafeEval(d: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+    UnsafeArrayData.fromPrimitiveArray(
       VectorKernels.maxSimMulti(metricCode, qs, d.asInstanceOf[ArrayData]))
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -541,8 +553,9 @@ case class MaxSimMulti(child: Expression,
     val mat = ctx.addMutableState("float[][][]", "qsets")
     nullSafeCodeGen(ctx, ev, d => s"""
       if ($mat == null) { $mat = (float[][][]) $bcRef.value(); }
-      ${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData(
-        graft.expr.VectorKernels.maxSimMulti($metricCode, $mat, $d));""")
+      ${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(
+          graft.expr.VectorKernels.maxSimMulti($metricCode, $mat, $d));""")
   }
 
   override protected def withNewChildInternal(newChild: Expression): MaxSimMulti =

@@ -54,39 +54,68 @@ object VectorKernels {
 
   /** One stored vector against a WHOLE query batch: the vector converts
     * to float[] ONCE and each query reuses it — per-(row, query) results
-    * equal `distance(code, a, qs(i))` bit for bit (same kernel, same
-    * accumulation order). The batch-scan shape: the corpus row is
-    * decoded/copied once regardless of batch size, where a per-pair
-    * cross join re-copies it per query. */
+    * equal `distance(code, a, qs(i))` bit for bit (see [[QueryLanes]]).
+    * The batch-scan shape: the corpus row is decoded/copied once
+    * regardless of batch size, where a per-pair cross join re-copies it
+    * per query. */
   def distanceMulti(code: Int, a: ArrayData, qs: Array[Array[Float]]): Array[Double] =
     distanceMultiPrefix(code, a, qs, 0)
 
   /** [[distanceMulti]] over the first `prefix` dimensions (0 = all):
-    * the Matryoshka funnel's stage scan — the stored vector slices ONCE
-    * per row (queries arrive pre-sliced), where the per-pair Column
-    * form allocates a slice per (row, query). */
+    * the Matryoshka funnel's stage scan — the stored vector is read up
+    * to the prefix (queries arrive pre-sliced), where the per-pair
+    * Column form allocates a slice per (row, query). Prepares the query
+    * table per call; scans hold one [[QueryLanes]] per task instead. */
   def distanceMultiPrefix(code: Int, a: ArrayData, qs: Array[Array[Float]],
-      prefix: Int): Array[Double] = {
-    val full = a.toFloatArray()
-    val v = if (prefix > 0 && prefix < full.length)
-      java.util.Arrays.copyOf(full, prefix) else full
-    val out = new Array[Double](qs.length)
-    var i = 0
-    while (i < qs.length) { out(i) = distance(code, v, qs(i)); i += 1 }
-    out
-  }
+      prefix: Int): Array[Double] =
+    new QueryLanes(code, qs).distances(a.toFloatArray(), prefix)
 
   /** bf16 twin of [[distanceMulti]]: unpack the 2 B/dim payload ONCE,
-    * then the plain float kernel per query — equals
+    * then the float kernel against every query — equals
     * `distanceBf16(code, b, qs(i))` bit for bit (codes 0-4 accumulate
     * the decoded values in the same order; codes above 4 already route
     * through [[unpackBf16]]). */
-  def distanceBf16Multi(code: Int, b: Array[Byte], qs: Array[Array[Float]]): Array[Double] = {
-    val v = unpackBf16(b)
-    val out = new Array[Double](qs.length)
-    var i = 0
-    while (i < qs.length) { out(i) = distance(code, v, qs(i)); i += 1 }
-    out
+  def distanceBf16Multi(code: Int, b: Array[Byte], qs: Array[Array[Float]]): Array[Double] =
+    new QueryLanes(code, qs).distances(unpackBf16(b), 0)
+
+  /** Query-per-lane batch kernel usable on this JVM: the incubator
+    * Vector API module loads, and a probe over mixed block/remainder
+    * shapes and edge values (zeros, subnormals, ±f32 max) gives sums
+    * bit-equal to the scalar sequential kernels. */
+  val simdLanes: Boolean = {
+    try {
+      var seed = 0x3C6EF372FE94F82BL
+      val edges = Array(0.0f, -0.0f, java.lang.Float.MIN_VALUE,
+        -1.0e-40f, Float.MaxValue, -Float.MaxValue)
+      def nextF(): Float = {
+        seed = seed * 6364136223846793005L + 1442695040888963407L
+        val r = (seed >>> 40).toInt
+        if ((r & 15) == 0) edges(r % edges.length) else (r / 16777216.0f) - 0.5f
+      }
+      val lanes = graft.simd.SimdLanes.laneCount()
+      var ok = true
+      for (dims <- Seq(1, 13, 37);
+           nq <- Seq(1, lanes + 1, graft.simd.SimdLanes.CHAINS * lanes + 3)) {
+        val qs = Array.fill(nq, dims)(nextF())
+        val v = Array.fill(dims)(nextF())
+        val pad = graft.simd.SimdLanes.paddedCount(nq)
+        val t = graft.simd.SimdLanes.table(qs, dims)
+        val ds = new Array[Double](pad)
+        val ls = new Array[Double](pad)
+        graft.simd.SimdLanes.dot(t, pad, v, dims, ds)
+        graft.simd.SimdLanes.l2sq(t, pad, v, dims, ls)
+        def same(x: Double, y: Double): Boolean =
+          java.lang.Double.doubleToRawLongBits(x) ==
+            java.lang.Double.doubleToRawLongBits(y)
+        var c = 0
+        while (c < nq) {
+          if (!same(ds(c), dot(v, qs(c), dims)) || !same(ls(c), l2sq(v, qs(c), dims)))
+            ok = false
+          c += 1
+        }
+      }
+      ok
+    } catch { case _: Throwable => false }
   }
 
   /** Literal-specialized entry point: the query side is already float[]. */
@@ -330,7 +359,11 @@ object VectorKernels {
   // every oracle-matched path stays on the sequential kernels, whose
   // order the DuckDB SQL replicates exactly.
 
-  /** Graph-walk ranking distance for codes 0..4 (l2/l2sq/cos/ip/nip). */
+  /** Graph-walk ranking distance for codes 0..4 (l2/l2sq/cos/ip/nip).
+    * This array form keeps the 4-chain order, so it is NOT bit-equal to
+    * the 16-chain [[rankingDistanceOff]] the graph builds use: the two
+    * can differ at the last ulp. Never mix them on one graph; graph
+    * ranking goes through the `Off` family. */
   def rankingDistance(code: Int, a: Array[Float], b: Array[Float]): Double = {
     val n = a.length
     if (b.length != n)
@@ -453,37 +486,6 @@ object VectorKernels {
     val t2 = (s(8) + s(9)) + (s(10) + s(11))
     val t3 = (s(12) + s(13)) + (s(14) + s(15))
     (t0 + t1) + (t2 + t3)
-  }
-
-  private def dot4Off(a: Array[Float], ao: Int, b: Array[Float], bo: Int, n: Int): Double = {
-    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-    var i = 0
-    val lim = n - 3
-    while (i < lim) {
-      s0 += a(ao + i).toDouble * b(bo + i).toDouble
-      s1 += a(ao + i + 1).toDouble * b(bo + i + 1).toDouble
-      s2 += a(ao + i + 2).toDouble * b(bo + i + 2).toDouble
-      s3 += a(ao + i + 3).toDouble * b(bo + i + 3).toDouble
-      i += 4
-    }
-    while (i < n) { s0 += a(ao + i).toDouble * b(bo + i).toDouble; i += 1 }
-    (s0 + s1) + (s2 + s3)
-  }
-
-  private def l2sq4Off(a: Array[Float], ao: Int, b: Array[Float], bo: Int, n: Int): Double = {
-    var s0 = 0.0; var s1 = 0.0; var s2 = 0.0; var s3 = 0.0
-    var i = 0
-    val lim = n - 3
-    while (i < lim) {
-      val d0 = a(ao + i).toDouble - b(bo + i).toDouble
-      val d1 = a(ao + i + 1).toDouble - b(bo + i + 1).toDouble
-      val d2 = a(ao + i + 2).toDouble - b(bo + i + 2).toDouble
-      val d3 = a(ao + i + 3).toDouble - b(bo + i + 3).toDouble
-      s0 += d0 * d0; s1 += d1 * d1; s2 += d2 * d2; s3 += d3 * d3
-      i += 4
-    }
-    while (i < n) { val d = a(ao + i).toDouble - b(bo + i).toDouble; s0 += d * d; i += 1 }
-    (s0 + s1) + (s2 + s3)
   }
 
   /** Graph-walk ranking over a bf16 byte ARENA vs a float[] query —
@@ -963,4 +965,54 @@ object VectorKernels {
     while (i < v.length) { if (!java.lang.Float.isFinite(v(i))) return false; i += 1 }
     true
   }
+}
+
+/** A query block prepared for the batch scan: each stored row is
+  * scored against every query in one call. Codes 0-4 (l2, l2sq,
+  * cosine, ip, negative ip) run [[graft.simd.SimdLanes]] over a
+  * f64-widened, block-contiguous table built once here, one query per
+  * SIMD lane; each lane adds its query's terms in scalar element order,
+  * so every value is bit-equal to `VectorKernels.distance(code, v, q)`.
+  * Other codes, a query block of mixed lengths, or a JVM whose probe
+  * failed ([[VectorKernels.simdLanes]]) take the scalar per-pair loop.
+  * Immutable after construction: one instance may serve concurrent
+  * scans. */
+final class QueryLanes(code: Int, qs: Array[Array[Float]]) {
+  private val nq = qs.length
+  private val dims = if (nq > 0) qs(0).length else 0
+  private val table: Array[Double] =
+    if (VectorKernels.simdLanes && code >= 0 && code <= 4 && nq > 0 &&
+        qs.forall(_.length == dims))
+      graft.simd.SimdLanes.table(qs, dims)
+    else null
+  private val pad = if (table != null) graft.simd.SimdLanes.paddedCount(nq) else 0
+
+  /** Distances of `full` (its first `prefix` elements when
+    * 0 < prefix < full.length) to every query. */
+  def distances(full: Array[Float], prefix: Int): Array[Double] = {
+    val n = if (prefix > 0 && prefix < full.length) prefix else full.length
+    if (table == null) {
+      val v = if (n < full.length) java.util.Arrays.copyOf(full, n) else full
+      val out = new Array[Double](nq)
+      var i = 0
+      while (i < nq) { out(i) = VectorKernels.distance(code, v, qs(i)); i += 1 }
+      return out
+    }
+    if (n != dims)
+      throw new IllegalArgumentException(s"dimension mismatch: $n vs $dims")
+    val sums = new Array[Double](pad)
+    if (code <= 1) graft.simd.SimdLanes.l2sq(table, pad, full, dims, sums)
+    else graft.simd.SimdLanes.dot(table, pad, full, dims, sums)
+    if (code == 0) { var i = 0; while (i < nq) { sums(i) = math.sqrt(sums(i)); i += 1 } }
+    else if (code == 4) { var i = 0; while (i < nq) { sums(i) = -sums(i); i += 1 } }
+    if (pad == nq) sums else java.util.Arrays.copyOf(sums, nq)
+  }
+
+  /** [[distances]] of a stored f32 row as a primitive-backed array. */
+  def distancesData(a: ArrayData, prefix: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(distances(a.toFloatArray(), prefix))
+
+  /** [[distances]] of a stored bf16 row as a primitive-backed array. */
+  def distancesBf16Data(b: Array[Byte]): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(distances(VectorKernels.unpackBf16(b), 0))
 }

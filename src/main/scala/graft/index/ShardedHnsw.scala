@@ -350,27 +350,28 @@ object ShardedHnsw {
   }
 
   /** Co-partition layout state so every shard's rows share one task —
-    * the shape [[searchManyPersisted]] wants. Repeated-batch callers
-    * should `.persist()` the result and pass it as `state`: serving
-    * then reads cached blocks with NO per-call shuffle (the default
-    * path re-shuffles the state every call). */
+    * the shape [[searchManyPersisted]] wants. A call with a `cacheKey`
+    * and no `state` already serves from this frame persisted per layout
+    * version ([[LayoutState]]), so warm calls re-read and re-shuffle
+    * nothing; pass a frame as `state` only to control its storage
+    * yourself. Without a `cacheKey` the state is re-read and re-shuffled
+    * every call. */
   def layoutState(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     val (nShards, _, _) = graft.ann.ModelStore.loadHnsw(spark,
       graft.ann.ModelStore.sidecarOf(path))
-    layoutState(spark, path, nShards)
+    LayoutState.read(spark, path, "hnsw_shard", nShards)
   }
-
-  private def layoutState(spark: org.apache.spark.sql.SparkSession,
-      path: String, nShards: Int): DataFrame =
-    spark.read.parquet(path).repartition(nShards, col("hnsw_shard"))
 
   /** Batch search over an at-rest layout written by [[writeLayout]]:
     * shard graphs reconstruct from persisted adjacency (no inserts, no
     * distance calls) into the executor cache under `cacheKey` — pass
     * the layout path (stable across sessions); "" rebuilds every call.
     * Results are bit-identical to `searchMany` over the same rows with
-    * the layout's shard count and params.
+    * the layout's shard count and params. With a `cacheKey` and no
+    * `state`, the co-partitioned layout state is persisted `DISK_ONLY`
+    * per layout version ([[LayoutState]]): a warm call runs no
+    * listing job, no layout scan and no layout shuffle.
     *
     * `filter`/`oversample` mirror [[searchMany]]'s post-filter: widened
     * per-shard beams, candidates joined against the predicate-filtered
@@ -416,8 +417,11 @@ object ShardedHnsw {
       if (validate) shardCounts(spark, path, version) else null
     // a task groups its partition locally (a shard never spans tasks —
     // layoutState's contract), so cached-graph serving avoids the
-    // groupByKey shuffle of the whole state frame per call
-    val stateFrame = state.getOrElse(layoutState(spark, path, nShards))
+    // groupByKey shuffle of the whole state frame per call; a keyed
+    // call serves from the version's persisted state
+    val stateFrame = state.getOrElse(
+      if (key.isEmpty) LayoutState.read(spark, path, "hnsw_shard", nShards)
+      else LayoutState.cached(spark, path, version, "hnsw_shard", nShards))
     val perShard = stateFrame
       .select(col("hnsw_shard").cast("int"), col("internal_id").cast("int"),
         col("id").cast("string"), col("layer").cast("int"),

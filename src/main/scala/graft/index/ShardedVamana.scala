@@ -239,28 +239,28 @@ object ShardedVamana {
   }
 
   /** Co-partition layout state so every shard's rows share one task.
-    * Repeated-batch callers should `.persist()` the result and pass it
-    * as `state` to [[searchManyPersisted]] — serving then reads cached
-    * blocks with no per-call shuffle. */
+    * A [[searchManyPersisted]] call with a `cacheKey` and no `state`
+    * already serves from this frame persisted per layout version
+    * ([[LayoutState]]); pass a frame as `state` only to control its
+    * storage yourself. Without a `cacheKey` the state is re-read and
+    * re-shuffled every call. */
   def layoutState(spark: org.apache.spark.sql.SparkSession,
       path: String): DataFrame = {
     val (nShards, _, _) = graft.ann.ModelStore.loadVamana(spark,
       graft.ann.ModelStore.sidecarOf(path))
-    layoutState(spark, path, nShards)
+    LayoutState.read(spark, path, "vamana_shard", nShards)
   }
-
-  private def layoutState(spark: org.apache.spark.sql.SparkSession,
-      path: String, nShards: Int): DataFrame =
-    spark.read.parquet(path).repartition(nShards, col("vamana_shard"))
 
   /** Batch search over a layout written by [[writeLayout]]: shard
     * graphs reconstruct from persisted adjacency (no inserts, no
     * distance calls) into the executor cache under `cacheKey` — pass
     * the layout path; "" rebuilds every call. Results are bit-identical
     * to [[searchMany]] over the same rows with the layout's shard count
-    * and params. The layout version is folded into the cache key and
+    * and params. The layout version is folded into the cache key,
     * caller-supplied `state` frames are validated against true
-    * per-shard counts, exactly like the persisted hnsw path. */
+    * per-shard counts, and a keyed call without `state` serves from the
+    * version's persisted state ([[LayoutState]]), exactly like the
+    * persisted hnsw path. */
   def searchManyPersisted(spark: org.apache.spark.sql.SparkSession,
       path: String, config: CollectionConfig, queries: DataFrame,
       limit: Int, cacheKey: String = "",
@@ -287,7 +287,9 @@ object ShardedVamana {
     val validate = state.isDefined
     val bexp: org.apache.spark.broadcast.Broadcast[Map[Int, Long]] =
       if (validate) shardCounts(spark, path, version) else null
-    val stateFrame = state.getOrElse(layoutState(spark, path, nShards))
+    val stateFrame = state.getOrElse(
+      if (key.isEmpty) LayoutState.read(spark, path, "vamana_shard", nShards)
+      else LayoutState.cached(spark, path, version, "vamana_shard", nShards))
     val perShard = stateFrame
       .select(col("vamana_shard").cast("int"), col("internal_id").cast("int"),
         col("id").cast("string"), col("vector").cast("array<float>"),

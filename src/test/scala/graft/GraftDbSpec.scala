@@ -919,4 +919,43 @@ class GraftDbSpec extends SparkSpec {
     // the measured curve persisted beside the partitioned layout
     assert(graft.ann.ModelStore.loadRecallCurve(spark, pqPath).isDefined)
   }
+
+  test("close keeps the cache of another open collection over the same layout") {
+    import org.apache.spark.storage.StorageLevel
+    import spark.implicits._
+    val db = new GraftDb(spark)
+    val vecs = (0 until 40).map(i =>
+      db.EmbeddingInput(id = f"c$i%02d", vector = Array(
+        math.cos(i * 0.21).toFloat, math.sin(i * 0.11).toFloat,
+        (i % 5) / 4.0f, (i % 2).toFloat)))
+    val q = Array(0.8f, 0.3f, 0.2f, 0.6f)
+    val queries = Seq(("q0", q.toSeq)).toDF("qid", "qvector")
+    for (idx <- Seq("flat", "hnsw")) {
+      db.createCollection(s"src_$idx", 4, index = idx)
+      db.batch(s"src_$idx", vecs)
+      val want = db.search(s"src_$idx", q, 3).collect().map(_.getString(0)).toSeq
+      val path = java.nio.file.Files.createTempDirectory(s"graft_close_$idx").toString
+      db.persistIndex(s"src_$idx", path)
+      val (a, b) = (s"a_$idx", s"b_$idx")
+      db.openIndexed(a, path)
+      db.openIndexed(b, path)
+      db.all(a).persist().count()
+      db.all(b).persist().count()
+      db.searchMany(a, queries, 3).collect()
+      db.searchMany(b, queries, 3).collect()
+      db.close(a)
+      assert(db.all(b).storageLevel !== StorageLevel.NONE,
+        s"$idx: closing $a dropped $b's cached blocks")
+      if (idx == "hnsw")
+        assert(graft.index.LayoutState.isCached(path),
+          "closing one collection dropped the layout state the other serves from")
+      assert(db.search(b, q, 3).collect().map(_.getString(0)).toSeq === want)
+      // the last collection over the layout releases what it cached
+      val bFrame = db.all(b)
+      db.close(b)
+      assert(bFrame.storageLevel === StorageLevel.NONE)
+      assert(!graft.index.LayoutState.isCached(path))
+      db.close(s"src_$idx")
+    }
+  }
 }

@@ -210,4 +210,54 @@ class KernelSpec extends SparkSpec {
       }
     }
   }
+
+  test("batch scoring kernel: every multi distance is bit-equal to the scalar kernel") {
+    // without the probe the suite would pass on the scalar fallback alone
+    assert(VectorKernels.simdLanes, "query-per-lane SIMD probe failed on this JVM")
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    val rnd = new scala.util.Random(20261018L)
+    val edges = Array(0.0f, -0.0f, Float.MinPositiveValue, -1.0e-40f,
+      3.4e38f, -3.4e38f, Float.NaN)
+    def value(): Float =
+      if (rnd.nextInt(6) == 0) edges(rnd.nextInt(edges.length))
+      else rnd.nextFloat() * 2 - 1
+    // raw bits for every value but NaN: which NaN payload a sum of two
+    // NaNs keeps is left open by the JVM (the JIT may order a commutative
+    // add's operands either way, in the scalar kernel too), so any NaN
+    // must meet a NaN
+    def bits(x: Double): Long =
+      if (x.isNaN) 0x7ff8000000000000L else java.lang.Double.doubleToRawLongBits(x)
+    def check(what: String, got: Array[Double], want: Int => Double): Unit = {
+      var i = 0
+      while (i < got.length) {
+        if (bits(got(i)) != bits(want(i)))
+          fail(s"$what query $i: ${got(i)} vs ${want(i)}")
+        i += 1
+      }
+    }
+    // 5 = manhattan: a code the kernel leaves on the scalar path
+    for (dims <- Seq(1, 7, 13, 384); nq <- Seq(1, 7, 32, 64, 65);
+         code <- Seq(0, 1, 2, 3, 4, 5)) {
+      val qs = Array.fill(nq, dims)(value())
+      val rows = Seq(Array.fill(dims)(0.0f),
+        Array.fill(dims)(Float.MinPositiveValue),
+        Array.tabulate(dims)(i => if (i % 2 == 0) 3.4e38f else -3.4e38f),
+        Array.tabulate(dims)(i => if (i == dims / 2) Float.NaN else 0.5f),
+        Array.fill(dims)(value()), Array.fill(dims)(value()))
+      for ((row, r) <- rows.zipWithIndex) {
+        val what = s"dims=$dims nq=$nq code=$code row=$r"
+        check(what, VectorKernels.distanceMultiPrefix(code,
+          UnsafeArrayData.fromPrimitiveArray(row), qs, 0),
+          i => VectorKernels.distance(code, row, qs(i)))
+        val prefix = (dims + 1) / 2
+        val qp = qs.map(_.take(prefix))
+        check(s"$what prefix=$prefix", VectorKernels.distanceMultiPrefix(code,
+          UnsafeArrayData.fromPrimitiveArray(row), qp, prefix),
+          i => VectorKernels.distance(code, row.take(prefix), qp(i)))
+        val packed = VectorKernels.packBf16(row)
+        check(s"$what bf16", VectorKernels.distanceBf16Multi(code, packed, qs),
+          i => VectorKernels.distanceBf16(code, packed, qs(i)))
+      }
+    }
+  }
 }

@@ -325,4 +325,45 @@ class VamanaSpec extends SparkSpec {
     ShardedVamana.clearCache(dir)
     coll.unpersist()
   }
+
+  test("warm persisted serving: one shard per task, no layout read, only the merge shuffles; appends and clearCache stay correct") {
+    val config = CollectionConfig("vamwarm", dims)
+    val coll = graft.prepare.Prepare
+      .prepareEmbeddings(embeddingRows(clusteredRows), config)
+    val dir = java.nio.file.Files.createTempDirectory("vamana_warm").toString
+    ShardedVamana.writeLayout(coll, config, dir, shards = 4)
+    val queries = (0 until 3).map(k => (s"q$k", synth(-310L - k).toSeq))
+      .toDF("qid", "qvector")
+    def search(qs: org.apache.spark.sql.DataFrame = queries) =
+      ShardedVamana.searchManyPersisted(spark, dir, config, qs, 5, cacheKey = dir)
+        .collect().map(r => (r.getString(0), r.getString(1), r.getDouble(2)))
+        .sortBy(t => (t._1, t._3, t._2)).toSeq
+    // one shard per task: partition s holds exactly shard s
+    val placement = ShardedVamana.layoutState(spark, dir)
+      .select(spark_partition_id(), col("vamana_shard")).distinct()
+      .collect().map(r => (r.getInt(0), r.getInt(1))).sorted.toSeq
+    assert(placement === (0 until 4).map(s => (s, s)))
+    val (cold, coldStages, coldShuffles) = recordJobs(search())
+    assert(coldStages.exists(_.startsWith("parquet at")), coldStages)
+    assert(coldShuffles === 2, "cold call: the layout shuffle and the merge")
+    val (warm, warmStages, warmShuffles) = recordJobs(search())
+    assert(warm === cold)
+    assert(!warmStages.exists(_.startsWith("parquet at")),
+      s"warm call re-read the layout: $warmStages")
+    assert(warmShuffles === 1, "warm call shuffles only the per-shard candidates")
+    // an append rotates the layout version: the next call serves it
+    val planted = synth(500L + 40)
+    ShardedVamana.appendLayout(spark, dir, config, graft.prepare.Prepare
+      .prepareEmbeddings(embeddingRows(Seq(("t40_new", planted))), config))
+    val q40 = Seq(("q40", planted.toSeq)).toDF("qid", "qvector")
+    assert(search(q40).map(_._2).contains("t40_new"))
+    // blocks dropped behind the cache's back are persisted again
+    val before = search()
+    spark.catalog.clearCache()
+    assert(!graft.index.LayoutState.isCached(dir))
+    assert(search() === before)
+    assert(graft.index.LayoutState.isCached(dir))
+    graft.index.LayoutState.release(dir)
+    ShardedVamana.clearCache(dir)
+  }
 }
